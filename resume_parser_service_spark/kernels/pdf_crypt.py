@@ -217,10 +217,21 @@ def _decrypt_block(rks: list[list[int]], block: bytes) -> bytes:
     return bytes(state)
 
 
+def _check_aes_key(key: bytes) -> None:
+    """PDF encryption uses AES-128 and AES-256 only. One gate in front
+    of both paths, so a key either path would treat differently (24
+    bytes: AES-192 in ``cryptography``; 17-19 bytes: silently truncated
+    by the pure key schedule) fails the same way with or without the
+    optional package."""
+    if len(key) not in (16, 32):
+        raise CryptError(f"bad AES key length {len(key)}")
+
+
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes,
                     pad: bool = True) -> bytes:
     """AES-CBC. With ``pad`` applies PKCS#7 (ISO 32000-1 §7.6.2 block
     padding); without, ``data`` must already be block-aligned."""
+    _check_aes_key(key)
     if pad:
         n = 16 - len(data) % 16
         data = data + bytes([n]) * n
@@ -241,6 +252,7 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes,
 
 def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes,
                     unpad: bool = True) -> bytes:
+    _check_aes_key(key)
     if len(data) % 16:
         # tolerate trailing slack bytes (crawled PDFs): drop them
         data = data[:len(data) - len(data) % 16]

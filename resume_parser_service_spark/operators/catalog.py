@@ -1112,7 +1112,8 @@ ORDER BY keeper_doc_id""")
     def _run_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .incremental import band_signatures
         register_views(spark, sf_dir)
-        return band_signatures(spark, spark.table("documents"))
+        return band_signatures(spark, spark.table("documents")) \
+            .orderBy("doc_id", "band_id")
     from .incremental import band_signatures_sql as _bands_sql
     c["band_signatures"] = (_run_bands, _bands_sql("duck"))
 

@@ -85,8 +85,13 @@ def band_signatures(spark: SparkSession, docs: DataFrame,
     exchange, a per-doc aggregation exchange, and ~n_hashes JVM
     md5-expression evaluations per shingle fanned out across
     ``n_bands`` inlined union branches; this kernel pays zero
-    exchanges before the final ordering (measured 4.3 s -> sub-second
-    at sf1.0)."""
+    exchanges (measured 4.3 s -> sub-second at sf1.0).
+
+    The output is UNORDERED: the index path only broadcasts and appends
+    it, and a range sort would run the kernel twice (a sampling job,
+    then the shuffle map). Callers whose contract is an ordered result
+    sort it themselves — the catalog ``band_signatures`` query orders
+    by (doc_id, band_id)."""
     import hashlib
 
     import pandas as pd
@@ -132,10 +137,8 @@ def band_signatures(spark: SparkSession, docs: DataFrame,
     slots = spark.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < slots:
         src = src.repartition(slots * 2)
-    return (src.mapInPandas(
-        kernel,
-        schema=f"doc_id {id_sql_type}, band_id int, band_hash long")
-        .orderBy("doc_id", "band_id"))
+    return src.mapInPandas(
+        kernel, schema=f"doc_id {id_sql_type}, band_id int, band_hash long")
 
 
 def _collisions(new_bands: DataFrame,

@@ -223,8 +223,8 @@ DUP_MAP_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def enrich_extracted(extracted: DataFrame,
-                     dup_map_broadcast_max: int = DUP_MAP_BROADCAST_MAX_ROWS
-                     ) -> DataFrame:
+                     dup_map_broadcast_max: int = DUP_MAP_BROADCAST_MAX_ROWS,
+                     cached: list | None = None) -> DataFrame:
     """Training-data annotations over extracted rows — pure JVM-side
     expressions (one window shuffle for content-dup marking, everything
     else map-side), mirroring the formulas of the catalog queries
@@ -242,6 +242,11 @@ def enrich_extracted(extracted: DataFrame,
     - ``dup_line_fraction`` / ``dup_bigram_fraction``: Gopher-style
       repetition signals as per-row array expressions (same values as
       ``operators.quality.repetition_signals``, zero extra shuffle)
+
+    ``cached``: a list the persisted dup map is appended to, so the
+    caller can unpersist it once the returned frame is materialized
+    (``run_extraction_job`` does); without one the cache lives until the
+    session ends.
     """
     toks = F.split(F.col("text"), " ")
 
@@ -318,6 +323,8 @@ def enrich_extracted(extracted: DataFrame,
     n_dup = dup_map.count()
     if n_dup <= dup_map_broadcast_max:
         dup_side = F.broadcast(dup_map)
+        if cached is not None:
+            cached.append(dup_map)
     else:
         dup_map.unpersist()
         dup_side = dup_map

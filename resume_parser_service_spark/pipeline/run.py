@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -61,7 +61,18 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
 
     ``canonicalize_urls=True``: canonicalize urls (operators.urlnorm)
     before dedup/resume so trivial variants (host case, default ports,
-    utm params, fragments) share one identity key."""
+    utm params, fragments) share one identity key.
+
+    No-op decision: one ``isEmpty`` probe on the resume-filtered input,
+    which Spark prunes to the url column. It runs before any
+    extraction, enrich or index plan is built and before anything is
+    persisted. Every remaining url ends up either extracted or
+    rejected, so an empty probe is exactly "nothing to extract and
+    nothing to reject".
+
+    Counts: ``extracted`` (ok, error and invalid rows) and ``rejected``
+    come from an ``Observation`` on the audit commit, whose frame holds
+    one row per extracted or rejected url — no separate count jobs."""
     # key blooms only on the PRIMARY keyed table — the point-lookup
     # target; the audit log and band index are append/scan tables where
     # an NDV-sized bloom is pure overhead
@@ -82,6 +93,10 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
 
     # resume point: urls already processed (ok, error or rejected)
     todo = audit_tbl.resume_filter(spark, pages)
+    if todo.isEmpty():
+        return {"run_id": run_id, "extracted": 0, "rejected": 0,
+                "snapshot_id": None, "compacted": None,
+                "resumed_noop": True}
 
     extracted, rejected = extract_pages(todo, salt_partitions=salt_partitions,
                                         dedup=True, salt_input=salt_input)
@@ -109,23 +124,16 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
     # for the session (one leak per batch in an ingest loop).
     extracted = kernel_out = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     enriched_out = None
+    dup_maps: list[DataFrame] = []  # enrich's dup-map cache, released below
     if enrich:
         # the enriched frame is persisted TOO: several downstream
-        # actions (count, table commit, audit commit, neardup join)
-        # would otherwise each re-run the dup-map aggregation + join
-        # over the kernel cache (r3 review finding)
-        extracted = enriched_out = enrich_extracted(extracted) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-    rejected = rejected.persist(StorageLevel.MEMORY_AND_DISK)
+        # actions (table commit, audit commit, neardup join) would
+        # otherwise each re-run the dup-map aggregation + join over the
+        # kernel cache (r3 review finding)
+        extracted = enriched_out = enrich_extracted(
+            extracted, cached=dup_maps).persist(StorageLevel.MEMORY_AND_DISK)
     new_bands = None
     try:
-        n_extracted = extracted.count()
-        n_rejected = rejected.count()
-        if n_extracted == 0 and n_rejected == 0:
-            return {"run_id": run_id, "extracted": 0, "rejected": 0,
-                    "snapshot_id": None, "compacted": None,
-                    "resumed_noop": True}
-
         bands_tbl = None
         seen = None
         if neardup_index:
@@ -185,7 +193,14 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
             F.lit(None).cast("double").alias("extract_ms"),
             F.lit(None).cast("string").alias("kernel_version"),
             F.current_timestamp().alias("committed_at"))
-        audit_tbl.commit(audit.unionByName(rej_audit))
+        # the counts ride on the audit commit: one row per extracted
+        # (ok, error, invalid) and per rejected url
+        n_ext = Observation(f"extracted-{run_id}")
+        n_rej = Observation(f"rejected-{run_id}")
+        one = F.count(F.lit(1)).alias("n")
+        audit_tbl.commit(audit.observe(n_ext, one)
+                         .unionByName(rej_audit.observe(n_rej, one)))
+        n_extracted, n_rejected = n_ext.get["n"], n_rej.get["n"]
 
         compacted = None
         if compact_after is not None:
@@ -217,8 +232,9 @@ def run_extraction_job(spark: SparkSession, pages: DataFrame, out_root: str,
                 "compacted": compacted, "resumed_noop": False}
     finally:
         kernel_out.unpersist()
-        rejected.unpersist()
         if enriched_out is not None:
             enriched_out.unpersist()
+        for dup_map in dup_maps:
+            dup_map.unpersist()
         if new_bands is not None:
             new_bands.unpersist()

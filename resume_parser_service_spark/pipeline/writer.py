@@ -12,6 +12,14 @@ On a real cluster this class is swapped for
 Mirrored semantics: one row per key with last-write-wins replace
 (/root/reference/app/services/resume_service.py:106-182), versioned
 reads (/root/reference/app/repositories/resume_repository.py:32-70).
+
+Each manifest also carries its snapshot's Spark row schema (the
+``org.apache.spark.sql.parquet.row.metadata`` footer key, copied while
+the footers are opened for the file stats). Reads merge those schemas
+in snapshot order and hand the result to the scan, so no Spark job
+reads every footer again (``mergeSchema``) on each read or lookup.
+Manifests written before the schema was recorded fall back to one
+footer per snapshot, read with pyarrow on the driver.
 """
 
 from __future__ import annotations
@@ -22,15 +30,53 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from . import manifests as _manifests
 
 __all__ = ["SnapshotTable", "SnapshotConflictError"]
 
+#: parquet footer key under which Spark stores the row schema (JSON)
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 class SnapshotConflictError(RuntimeError):
     """Two writers raced to the same snapshot id; the loser raises
     instead of clobbering (optimistic concurrency, Iceberg-style)."""
+
+
+def _merge_types(left, right):
+    """Spark's schema-merge rule (``StructType.merge``): struct fields
+    merge by name in ``left``'s order with ``right``'s new fields
+    appended, arrays and maps merge element-wise, nullability is OR-ed,
+    and any other pair of types must be equal or the merge raises."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        rfields = {f.name: f for f in right.fields}
+        fields = []
+        for f in left.fields:
+            r = rfields.pop(f.name, None)
+            fields.append(f if r is None else StructField(
+                f.name, _merge_types(f.dataType, r.dataType),
+                f.nullable or r.nullable, f.metadata))
+        return StructType(fields + list(rfields.values()))
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(_merge_types(left.elementType, right.elementType),
+                         left.containsNull or right.containsNull)
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(_merge_types(left.keyType, right.keyType),
+                       _merge_types(left.valueType, right.valueType),
+                       left.valueContainsNull or right.valueContainsNull)
+    if left != right:
+        raise ValueError(f"cannot merge incompatible column types "
+                         f"{left.simpleString()} and {right.simpleString()}")
+    return left
+
+
+def _footer_schema(fp: str) -> dict | None:
+    """The Spark row schema (JSON dict) stored in a parquet footer."""
+    import pyarrow.parquet as pq
+    raw = (pq.read_metadata(fp).metadata or {}).get(_ROW_METADATA)
+    return json.loads(raw) if raw else None
 
 
 def _hash60_py(s: str) -> int:
@@ -128,15 +174,7 @@ class SnapshotTable:
         if not live:
             return None
         last = live[-1]
-        fp = None
-        for dirpath, _dirs, files in os.walk(
-                os.path.join(self.root, last["path"])):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    fp = os.path.join(dirpath, f)
-                    break
-            if fp:
-                break
+        fp = self._first_data_file(last)
         if fp is None:
             return None
         try:
@@ -310,10 +348,13 @@ class SnapshotTable:
         if self.buckets:
             writer = writer.partitionBy("_bucket")
         writer.parquet(path)
+        files, schema = self._file_stats(path)
         manifest = {"id": snap_id, "parent": last["id"] if last else None,
                     "path": rel, "committed_at": time.time(),
                     "schema_version": len(self._evolution()),
-                    "files": self._file_stats(path)}
+                    "files": files}
+        if schema is not None:
+            manifest["schema"] = schema
         if replaces:
             manifest["replaces"] = sorted(replaces)
             manifest["compaction"] = True
@@ -343,17 +384,19 @@ class SnapshotTable:
         os.unlink(tmp)
         return snap_id
 
-    def _file_stats(self, path: str) -> list[dict]:
+    def _file_stats(self, path: str) -> tuple[list[dict], dict | None]:
         """Per-data-file manifest stats (Iceberg manifest-entry
         equivalent): rows, bytes, and min/max of the key column read
         from the parquet footers (pyarrow, driver-side, no Spark job) —
         lets point lookups and key-range scans prune files without
-        opening them."""
+        opening them. Also returns the snapshot's Spark row schema
+        from the first footer that carries one (None if none does)."""
         try:
             import pyarrow.parquet as pq
         except ImportError:  # stats are an optimization, never required
-            return []
+            return [], None
         out: list[dict] = []
+        schema = None
         for dirpath, _dirs, files in os.walk(path):
             for f in sorted(files):
                 if not f.endswith(".parquet"):
@@ -364,6 +407,9 @@ class SnapshotTable:
                 try:
                     meta = pq.ParquetFile(fp).metadata
                     entry["rows"] = meta.num_rows
+                    raw = (meta.metadata or {}).get(_ROW_METADATA)
+                    if schema is None and raw:
+                        schema = json.loads(raw)
                     idx = {meta.schema.column(i).name: i
                            for i in range(meta.num_columns)}
                     ki = idx.get(self.key_col)
@@ -385,7 +431,7 @@ class SnapshotTable:
                 except Exception:  # noqa: BLE001 — footer quirks: skip stats
                     pass
                 out.append(entry)
-        return out
+        return out, schema
 
     # ------------------------------------------------------------- read --
     def read(self, spark: SparkSession, version: int | None = None
@@ -402,6 +448,55 @@ class SnapshotTable:
             target = max(s.get("schema_version", 0) for s in snaps)
         return self._read_snaps(spark, snaps, to_version=target)
 
+    def _first_data_file(self, snap: dict) -> str | None:
+        """Path of a snapshot's first parquet file, None if it has none."""
+        for dirpath, _dirs, files in os.walk(
+                os.path.join(self.root, snap["path"])):
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    return os.path.join(dirpath, f)
+        return None
+
+    def _scan_schema(self, snaps: list[dict]) -> StructType | None:
+        """The schema ``mergeSchema`` would infer from the footers of
+        ``snaps``, merged in snapshot order from their manifests — or,
+        for a manifest written before schemas were recorded, from the
+        snapshot's first footer. A snapshot with no data file adds no
+        columns; None when one with data has no recoverable schema."""
+        merged = None
+        for s in snaps:
+            schema = s.get("schema")
+            if schema is None:
+                fp = self._first_data_file(s)
+                if fp is None:
+                    continue
+                try:
+                    schema = _footer_schema(fp)
+                except Exception:  # noqa: BLE001 — no pyarrow, odd footer
+                    schema = None
+                if schema is None:
+                    return None
+            st = StructType.fromJson(schema)
+            merged = st if merged is None else _merge_types(merged, st)
+        return merged
+
+    def _scan(self, spark: SparkSession, snaps: list[dict],
+              paths: list[str], base_path: str | None = None) -> DataFrame:
+        """One parquet scan of ``paths`` (dirs or files of ``snaps``)
+        under the manifests' merged schema: columns missing from older
+        snapshots read as NULL (Iceberg semantics) and no Spark job
+        re-reads the footers. Spark merges the footers itself only when
+        no schema is recorded."""
+        reader = spark.read
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        schema = self._scan_schema(snaps)
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
     def _read_snaps(self, spark: SparkSession, snaps: list[dict],
                     to_version: int | None = None) -> DataFrame | None:
         """Union an explicit snapshot list (each frame transformed from
@@ -412,22 +507,18 @@ class SnapshotTable:
             return None
         ops = self._evolution()  # loaded ONCE per read
         if not self.buckets and not ops:
-            # fast path: one multi-path scan. mergeSchema covers the
-            # implicit (pre-declared) additive case — columns missing
-            # from older snapshots read as NULL, Iceberg semantics
+            # fast path: one multi-path scan
             paths = [os.path.join(self.root, s["path"]) for s in snaps]
-            return spark.read.option("mergeSchema", "true").parquet(*paths)
+            return self._scan(spark, snaps, paths)
         # bucketed layout and/or declared evolution ops: per-snapshot
         # read so each frame is transformed from ITS schema version
         df = None
         for s in snaps:
             p = os.path.join(self.root, s["path"])
-            reader = spark.read.option("mergeSchema", "true")
-            if self.buckets:
-                reader = reader.option("basePath", p)
-            part = self._apply_evolution(reader.parquet(p),
-                                         s.get("schema_version", 0), ops,
-                                         to_version)
+            scan = self._scan(spark, [s], [p],
+                              base_path=p if self.buckets else None)
+            part = self._apply_evolution(scan, s.get("schema_version", 0),
+                                         ops, to_version)
             df = part if df is None else df.unionByName(
                 part, allowMissingColumns=True)
         return df
@@ -447,14 +538,13 @@ class SnapshotTable:
                 return None
             if not ops:
                 # no declared evolution: keep the single multi-path
-                # scan on the B1 hot path (mergeSchema covers the
-                # implicit additive case)
-                return spark.read.option("mergeSchema", "true") \
-                    .parquet(*[p for _s, p in found])
+                # scan on the B1 hot path
+                return self._scan(spark, [s for s, _p in found],
+                                  [p for _s, p in found])
             df = None
             for s, p in found:
                 part = self._apply_evolution(
-                    spark.read.option("mergeSchema", "true").parquet(p),
+                    self._scan(spark, [s], [p]),
                     s.get("schema_version", 0), ops)
                 df = part if df is None else df.unionByName(
                     part, allowMissingColumns=True)
@@ -465,16 +555,14 @@ class SnapshotTable:
                 return None
             if not ops:
                 files = [f for _s, fs in groups for f in fs]
-                return spark.read.option("mergeSchema", "true") \
-                    .parquet(*files)
+                return self._scan(spark, [s for s, _fs in groups], files)
             # declared evolution: per-snapshot pruned reads so each
             # group transforms from ITS schema version — manifest-stats
             # pruning (B11) is retained under evolution
             df = None
             for snap, files in groups:
                 part = self._apply_evolution(
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*files),
+                    self._scan(spark, [snap], files),
                     snap.get("schema_version", 0), ops)
                 df = part if df is None else df.unionByName(
                     part, allowMissingColumns=True)
@@ -485,18 +573,33 @@ class SnapshotTable:
         """B1 point lookup. With a bucketed layout only the key's bucket
         directory of each snapshot is scanned (1/buckets of the files);
         unbucketed tables fall back to manifest-stats file pruning or a
-        filtered full read."""
+        filtered full read.
+
+        A key has a handful of versions, so they come back from the
+        pruned scan as one Arrow table and are resolved on the driver by
+        ``read_current``'s rule: the highest ``_snapshot_id`` wins and a
+        tombstone hides the key. The result is a local relation with
+        ``read_current``'s columns in its order — one scan job, no
+        aggregation shuffle, and collecting it starts no further job."""
+        import pyarrow as pa
         from pyspark.sql import functions as F
         df = self._key_scoped_read(spark, key)
         if df is None:
-            return spark.createDataFrame([], f"{self.key_col} string")
-        rest = [c for c in df.columns if c != self.key_col]
-        cur = (df.filter(F.col(self.key_col) == key)
-               .groupBy(self.key_col)
-               .agg(F.max_by(F.struct(*rest), F.col("_snapshot_id"))
-                    .alias("_row"))
-               .select(self.key_col, "_row.*"))
-        return cur.filter(~F.col("_deleted")).drop("_deleted")
+            return spark.createDataFrame(
+                pa.table({self.key_col: pa.array([], pa.string())}))
+        fields = [df.schema[self.key_col]] + [
+            f for f in df.schema.fields
+            if f.name not in (self.key_col, "_deleted")]
+        versions = df.filter(F.col(self.key_col) == key).toArrow()
+        stamps = versions.column("_snapshot_id").to_pylist()
+        hit = versions.slice(0, 0)
+        live = [i for i, s in enumerate(stamps) if s is not None]
+        if live:
+            i = max(live, key=stamps.__getitem__)
+            if versions.column("_deleted")[i].as_py() is False:
+                hit = versions.slice(i, 1)
+        return spark.createDataFrame(hit.select([f.name for f in fields]),
+                                     StructType(fields))
 
     def read_current(self, spark: SparkSession,
                      version: int | None = None) -> DataFrame | None:

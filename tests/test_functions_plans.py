@@ -128,6 +128,24 @@ def test_catalog_pricing_summary_pushes_shipdate(spark):
                          "l_extendedprice", "l_discount", "l_shipdate"}
 
 
+def test_band_signatures_unordered_catalog_ordered(spark, docs):
+    """The index path's band signatures are only broadcast and appended:
+    no range exchange, whose sampling job would run the MinHash kernel a
+    second time. The catalog query's contract is an ordered result, so
+    it sorts by (doc_id, band_id) itself."""
+    from resume_parser_service_spark.operators.catalog import build_catalog
+    from resume_parser_service_spark.operators.incremental import (
+        band_signatures)
+    plan = formatted_plan(band_signatures(spark, docs))
+    assert "MapInPandas" in plan
+    assert "rangepartitioning" not in plan
+    fn, _ = build_catalog()["band_signatures"]
+    q = fn(spark, SF_DIR)
+    assert "rangepartitioning(doc_id" in formatted_plan(q)
+    got = [(r["doc_id"], r["band_id"]) for r in q.collect()]
+    assert got and got == sorted(got)
+
+
 def test_neardup_pairs_plan_shape(spark):
     """embedding_neardup_pairs (r6 numpy runner): banding + exact
     verification run as vectorized batches — no cartesian product, no

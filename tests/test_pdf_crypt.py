@@ -69,6 +69,26 @@ def test_cbc_roundtrip_and_padding():
         aes_cbc_encrypt(key, iv, b"x" * 20, pad=False)
 
 
+@pytest.mark.parametrize("fast", [False, True])
+@pytest.mark.parametrize("n", [16, 17, 24, 32])
+def test_aes_key_length_same_on_both_paths(monkeypatch, fast, n):
+    """AES-128/256 only, with or without ``cryptography``: a 24-byte key
+    (AES-192 there) and a 17-byte key (truncated by the pure key
+    schedule) both raise the same CryptError."""
+    if fast and not hasattr(pc, "_Cipher"):
+        pytest.skip("cryptography not installed")
+    monkeypatch.setattr(pc, "_HAVE_FAST_CRYPTO", fast)
+    key, iv, data = bytes(range(n)), b"\x02" * 16, b"resume bytes"
+    if n in (16, 32):
+        enc = aes_cbc_encrypt(key, iv, data)
+        assert aes_cbc_decrypt(key, iv, enc) == data
+        return
+    with pytest.raises(CryptError, match="bad AES key length"):
+        aes_cbc_encrypt(key, iv, data)
+    with pytest.raises(CryptError, match="bad AES key length"):
+        aes_cbc_decrypt(key, iv, b"\x00" * 32)
+
+
 # ---------------------------------------------------------- round-trips
 
 @pytest.mark.parametrize("mode", sorted(MODES))
